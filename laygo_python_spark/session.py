@@ -155,6 +155,63 @@ def local_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.createDataFrame(pdf, schema=st)
 
 
+def pin(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` once, so every later read of the result scans
+    stored blocks instead of re-running its lineage — the engine's one
+    way to pin a frame that several subtrees, jobs or loop rounds read.
+
+    Idempotent: an already pinned frame comes back unchanged, so pinning
+    a caller's pinned input costs no job. Pinned means the analyzed plan
+    is a ``LogicalRDD`` whose RDD is STORED — a list-backed
+    ``createDataFrame`` (hence ``Pipeline(*data)`` ingestion) is a
+    ``LogicalRDD`` too, over an RDD that is never stored.
+
+    The pin is an eager ``localCheckpoint``. Its blocks live on the
+    executors that computed them and CANNOT be replayed from lineage on
+    executor loss, so pin only small or derived frames (distinct
+    signatures, sketches, candidate pairs, per-round labels), never a
+    raw corpus. Release is ``unpin`` or, failing that, the async
+    ContextCleaner once the frame is dereferenced."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        level = plan.rdd().getStorageLevel()
+        if level.useMemory() or level.useDisk():
+            return df
+    return df.localCheckpoint(eager=True)
+
+
+def unpin(*pinned: DataFrame) -> None:
+    """Free the blocks of frames returned by ``pin``, without blocking.
+
+    ``DataFrame.unpersist`` cannot do this: a checkpoint is an RDD-level
+    store the CacheManager never sees. So each frame's own RDD is read
+    from its plan and unpersisted by that id — never another frame's
+    pin, even when other driver threads pin concurrently. The frames
+    (and anything lazily derived from them) must not be recomputed
+    afterwards."""
+    for df in pinned:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def concurrent_actions(*thunks) -> None:
+    """Run independent driver actions (writes to DISTINCT directories,
+    whose input frames are checkpoint-pinned) concurrently — Spark's
+    scheduler interleaves their stages across executor slots, so the
+    wall cost is ~max instead of sum. At sf0.1 each parquet write is
+    dominated by fixed job-scheduling floor (~0.3 s), and the index
+    write/append paths issue 4–5 of them; sequential issue billed ~1 s
+    of pure scheduling per operation (measured r6). Same driver-side
+    thread-fanout discipline as ``Pipeline.branch``. Exceptions
+    propagate (first one wins) — a failed write must fail the
+    operation."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
+        futures = [ex.submit(t) for t in thunks]
+        for f in futures:
+            f.result()
+
+
 _TABLE_CACHE: dict[tuple[str, str, str], tuple[object, DataFrame]] = {}
 
 
